@@ -39,11 +39,14 @@ def apply_changes(
     ``changes`` carries the key columns, an ``op_col`` (``'upsert'`` or
     ``'delete'``), ``payload_cols`` (the replacement values — ignored
     for deletes) and an ``order_key`` expression that totally orders
-    changes per key (ties would make the winner undefined — pass a
-    unique key; prefer ``F.struct(version, change_id)``, which orders
-    lexicographically at any id range, over integer packing like
+    changes per key — ``latest_by``'s contract: a SCALAR key, UNIQUE per
+    change within a key (ties would make the winner undefined). Pack a
+    lexicographic pair with ``windows.packed_order(version, change_id)``,
+    which orders at any bigint range; never with
     ``version*1e6 + change_id``, which silently inverts once the minor
-    key outgrows the multiplier).
+    key outgrows the multiplier, nor with ``F.struct``, which forces
+    SortAggregate (string payloads such as a name still do; see
+    ``latest_by``).
 
     Output schema = keys + payload_cols. Base rows must share it.
     """
@@ -77,8 +80,8 @@ def scd2_intervals(
     ``max_by`` reduction), SCD2 needs every change's successor, which
     is irreducibly a per-key ordered pass: ONE window shuffle on the
     key, no joins, no full-history replication. ``(sec_col, tie_col)``
-    must totally order changes within a key (same struct-not-packed
-    discipline as ``apply_changes``' order_key) and must be NON-NULL:
+    must totally order changes within a key (the same pair
+    ``apply_changes`` takes packed as its order_key) and must be NON-NULL:
     Spark windows sort NULLS FIRST where DuckDB's default is NULLS
     LAST, so a NULL change time would produce engine-dependent
     interval chains (the same cross-engine hazard ``asof_join``

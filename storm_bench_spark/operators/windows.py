@@ -187,15 +187,6 @@ def packed_order(hi: Column | str, lo: Column | str) -> Column:
     ) + lo_c.cast("decimal(19,0)")
 
 
-def unpack_order_hi(packed: Column | str) -> Column:
-    """The ``hi`` bigint back out of :func:`packed_order` (exact
-    decimal arithmetic; valid for hi ≥ 0, which every current caller
-    satisfies — epoch-derived timestamps)."""
-    p = F.col(packed) if isinstance(packed, str) else packed
-    radix = F.expr(f"CAST({_PACK_RADIX} AS DECIMAL(20,0))")
-    return ((p - (p % radix)) / radix).cast("bigint")
-
-
 def latest_by(df: DataFrame, key_cols: Sequence[str], order_key: Column, payload_cols: Sequence[str]) -> DataFrame:
     """Newest row per key: per-column ``max_by(col, order_key)``.
 

@@ -23,6 +23,7 @@ from storm_bench_spark.operators.graph import (
     pagerank,
     pagerank_oracle_sql,
 )
+from storm_bench_spark.operators.windows import packed_order
 from storm_bench_spark.plans.dedup_queries import MINHASH_PAIRS_SQL, minhash_lsh
 from storm_bench_spark.plans.registry import register
 from storm_bench_spark.sources import derived as D
@@ -150,14 +151,16 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase → delete): latest change per key wins via the
     partial-aggregable max_by reduction, superseded base rows leave
     through one left-anti join, upserts union in
-    (operators/cdc.apply_changes). The order key is the STRUCT
-    (sec, event_id) — lexicographic, total, and safe at any id range
-    (the earlier ``sec·10^6 + event_id`` packing silently inverts the
-    order once event_id reaches 10^6, i.e. at sf ≥ 10). The oracle
-    replays the same latest-wins resolution in SQL."""
+    (operators/cdc.apply_changes). The order key is
+    ``packed_order(sec, event_id)`` — the lexicographic pair as one
+    scalar DECIMAL(38,0), total and safe at any id range (the earlier
+    ``sec·10^6 + event_id`` packing silently inverts the order once
+    event_id reaches 10^6, i.e. at sf ≥ 10), as ``latest_by``'s
+    scalar-key contract asks. The oracle replays the same latest-wins
+    resolution in SQL."""
     base = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     ch = cdc_changelog(D.events_sec(spark, sf_dir))
-    order_key = F.struct(F.col("sec"), F.col("event_id"))
+    order_key = packed_order("sec", "event_id")
     return apply_changes(
         base, ch, keys=["c_custkey"], order_key=order_key, payload_cols=["c_name"]
     )
@@ -265,8 +268,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is a non-negative doc id, the valid low part for packed_order;
     # min_by is associative exactly like max_by, hence still map-side
     # combinable.
-    from storm_bench_spark.operators.windows import packed_order
-
     key = packed_order(-F.col("nt"), F.col("node"))
     return m.groupBy("comp").agg(
         F.min_by("node", key).alias("keeper"),

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_bench_spark.functions.text import WS_RUN_PATTERN, word_split
-from storm_bench_spark.operators.windows import sliding_agg
+from storm_bench_spark.operators.windows import packed_order, sliding_agg
 from storm_bench_spark.plans import topologies as T
 from storm_bench_spark.plans.registry import register
 from storm_bench_spark.sources.derived import DOC_EPOCH, DOC_TS_STEP_SEC
@@ -255,7 +255,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- custom stateful operator (applyInPandasWithState) -------------------
+# --- custom stateful operator (JVM flatMapGroupsWithState kernel) ---------
 
 @register(
     "stateful_running_count",
@@ -265,8 +265,9 @@ SELECT event_type AS key, count(*) AS cnt FROM events GROUP BY event_type
 )
 @drains_input_bytes_on_error
 def stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key cumulative count via arbitrary keyed state
-    (applyInPandasWithState) — the WordCount.Count HashMap semantics.
+    """Per-key cumulative count via arbitrary keyed state (the JVM
+    ``flatMapGroupsWithState`` kernel behind ``running_count``) — the
+    WordCount.Count HashMap semantics.
 
     Emissions are per-batch cumulative values; the final value per key
     (max of the monotone series) equals the batch count, which is what
@@ -431,7 +432,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The chronological split cuts on time-range terciles, so a key's
     later change always lands in a later-or-equal batch (the module's
-    ordering contract); within a batch the (sec, event_id) struct
+    ordering contract); within a batch ``packed_order(sec, event_id)``
     resolves.
     """
     import os
@@ -477,7 +478,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         base,
         change_stream,
         keys=["c_custkey"],
-        order_key=F.struct(F.col("sec"), F.col("event_id")),
+        order_key=packed_order("sec", "event_id"),
         payload_cols=["c_name"],
     )
 

@@ -1,11 +1,14 @@
-"""Custom keyed-state operator: per-key running count.
+"""Custom keyed-state operators.
 
-This is WordCount.Count's actual semantics (WordCount.java:74-100): an
-unwindowed HashMap of cumulative counts, updated per input and emitted
-as it grows — state that never expires. Built-in streaming aggregation
-gives the same *final* state; this operator exists to cover the
-arbitrary-keyed-state capability (flightMap-style upserts —
-RollingFlightDist.java:154,216-218) via ``applyInPandasWithState``:
+``running_count`` is WordCount.Count's actual semantics
+(WordCount.java:74-100): an unwindowed HashMap of cumulative counts,
+updated per input and emitted as it grows — state that never expires.
+It runs as a Java ``flatMapGroupsWithState`` kernel
+(``storm_bench_spark/jvm/RunningCount.java``) inside the engine's own
+stateful operator, so no batch leaves the JVM. The funnel machine, the
+KMV sketch and the bounded top-n below remain the
+``applyInPandasWithState`` examples of arbitrary keyed state
+(flightMap-style upserts — RollingFlightDist.java:154,216-218):
 Arrow-batched, partitioned by key, state store local to each task.
 """
 
@@ -19,20 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-OUTPUT_SCHEMA = StructType(
-    [StructField("key", StringType()), StructField("cnt", LongType())]
-)
-STATE_SCHEMA = StructType([StructField("cnt", LongType())])
-
-
-def _update_running_count(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    current = state.get[0] if state.exists else 0
-    added = sum(len(p) for p in pdfs)
-    total = current + added
-    state.update((total,))
-    yield pd.DataFrame({"key": [key[0]], "cnt": [total]})
+from storm_bench_spark.jvm import kernels
 
 
 def running_count(keyed: DataFrame, key_col: str) -> DataFrame:
@@ -41,16 +31,13 @@ def running_count(keyed: DataFrame, key_col: str) -> DataFrame:
     ``keyed`` must be a streaming DataFrame; emissions are per-batch
     (the documented per-tuple → per-trigger semantic mapping,
     SURVEY.md §4.3.1), so the cumulative count is monotone per key and
-    the final value per key equals the batch groupBy count.
+    the final value per key equals the batch groupBy count. Output is
+    ``(key string, cnt bigint)`` in append mode: the key column is cast
+    to string, and a null key counts as a group of its own.
     """
-    renamed = keyed.select(F.col(key_col).alias("key"))
-    return renamed.groupBy("key").applyInPandasWithState(
-        _update_running_count,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    spark = keyed.sparkSession
+    renamed = keyed.select(F.col(key_col).cast("string").alias("key"))
+    return DataFrame(kernels(spark).RunningCount.apply(renamed._jdf), spark)
 
 
 # --- sequential-pattern state machine: funnel stage tracking -------------

@@ -4,9 +4,10 @@ The reference's streaming machinery maps onto Structured Streaming:
 tick tuples → triggers, slot rings → windowed state store, ackers →
 checkpointing, Trident transactional batches → micro-batch epochs with
 exactly-once state. These helpers re-run the engine's queries through
-``readStream`` so stream/batch parity is a tested property, and provide
-the custom stateful operator path (``applyInPandasWithState``) for the
-per-tuple running-count semantics no built-in mode reproduces.
+``readStream`` so stream/batch parity is a tested property, and run
+the custom keyed-state operators of ``streaming/stateful.py`` (the JVM
+running-count kernel for the per-tuple running-count semantics no
+built-in mode reproduces; ``applyInPandasWithState`` for the rest).
 """
 
 from __future__ import annotations

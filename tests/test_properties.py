@@ -569,3 +569,29 @@ def test_dup_span_extents_matches_python_islands(spark, corpus_texts, k):
         for s, e, nw in spans:
             expect[(d, s)] = (e - s + k, nw)
     assert got == expect
+
+
+# ---------------------------------------------------------------------------
+# packed_order: sort by (hi, lo) == sort by the packed scalar
+
+
+def test_packed_order_preserves_pair_order_at_bigint_extremes(spark):
+    """``packed_order(hi, lo)`` orders exactly like the pair: ``hi`` at
+    the bigint extremes and negative, ``lo`` over the whole non-negative
+    bigint range. Overflow would raise (ANSI) or null out the key, and a
+    wrong radix would interleave neighbouring ``hi`` values."""
+    from storm_bench_spark.operators.windows import packed_order
+
+    big = 2**63 - 1
+    his = [-(2**63), -(2**63) + 1, -(10**18), -2, -1, 0, 1, 10**18, big - 1, big]
+    los = [0, 1, 10**18, big - 1, big]
+    pairs = [(h, lo) for h in his for lo in los]
+    df = spark.createDataFrame(pairs, "hi bigint, lo bigint").withColumn("p", packed_order("hi", "lo"))
+    rows = [(r["hi"], r["lo"], r["p"]) for r in df.collect()]
+    assert all(p is not None for _, _, p in rows)
+    assert len({p for _, _, p in rows}) == len(pairs)
+    by_pair = [(h, lo) for h, lo, _ in sorted(rows, key=lambda t: (t[0], t[1]))]
+    by_packed = [(h, lo) for h, lo, _ in sorted(rows, key=lambda t: t[2])]
+    assert by_packed == by_pair
+    # and the engine's own sort on the packed column agrees
+    assert [(r["hi"], r["lo"]) for r in df.orderBy("p").collect()] == by_pair
